@@ -46,8 +46,17 @@ def main() -> int:
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
+    from sentometrics_spark.golden import REFERENCE_ROOT
+
     qs = entry.queries()
     oracles = entry.oracle_sql()
+    n_golden = sum(name.startswith("golden_") for name in qs)
+    golden = (
+        f"{n_golden} golden_* rows present"
+        if n_golden
+        else f"golden_* rows absent (no reference data under {REFERENCE_ROOT})"
+    )
+    print(f"contract: {len(qs)} queries, {len(oracles)} oracles, {golden}", flush=True)
     failures = []
     for name, fn in qs.items():
         if name_filter and not any(f in name for f in name_filter):

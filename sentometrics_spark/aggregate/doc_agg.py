@@ -1,4 +1,5 @@
-"""Across-document aggregation per time bucket (A1-A4).
+"""Across-document aggregation per time bucket (A1-A4), and the one home of
+the bucket partial-sum format.
 
 Semantics ported from aggregate_docs + weights_across
 (/root/reference/R/sentomeasures_main.R:355-404, :518-580):
@@ -15,27 +16,38 @@ where the numerator depends on the scheme:
   inverseExponential    num = 10*alpha*(1 - wc_d / WC_bucket)
 
 WC_bucket = sum of word counts over ALL docs in the bucket (one count per
-document, not per long-format row). With do.ignoreZeros = TRUE
-(/root/reference/R/sentomeasures_main.R:379-384), exact-zero scores become
-NULL first, and the weight-normalizing set D is the per-(bucket, lexicon,
-feature) NON-NULL set — denominators differ per measure column, the #1
-source of subtle mismatches.
+document, not per long-format row; ``word_count_total``). With
+do.ignoreZeros = TRUE (/root/reference/R/sentomeasures_main.R:379-384),
+exact-zero scores become NULL first, and the weight-normalizing set D is the
+per-(bucket, lexicon, feature) NON-NULL set — denominators differ per
+measure column, the #1 source of subtle mismatches.
 
-Output keeps the partial-sum pair (wsum = sum num*s, wden = sum num) so
-higher tiers compose exactly for the doc-local schemes; ``value`` is the
-finalized ratio with the reference's sum(na.rm=TRUE)-over-empty => 0 edge
-(coalesce to 0.0).
+Partial-sum format. Per (bucket_ts, lexicon, feature) a bucket carries the
+additive partials ``PARTIAL_COLS``:
+
+  wsum = sum num*s,  wden = sum num   (over the non-null set D)
+  n_docs_in = |D|,   n_docs = rows in the bucket
+
+and ``value`` = wsum / wden, or 0.0 where that is undefined (the
+reference's sum(na.rm=TRUE)-over-empty edge). For the doc-LOCAL schemes the
+partials of disjoint document sets add, so hour -> day -> week -> month
+tiers, salted phases, streaming micro-batches and fused per-batch partials
+all compose exactly through ``merge_partials``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 BUCKET_FNS = {"hour", "day", "week", "month", "year"}
 
 MEASURE_KEYS = ["lexicon", "feature"]
+
+PARTIAL_COLS = ["wsum", "wden", "n_docs_in", "n_docs"]
+
+# the finalized bucket value from its partials (see module docstring)
+PARTIAL_VALUE_SQL = "coalesce(try_divide(wsum, wden), 0D)"
 
 # do.ignoreZeros zero detection: the reference compares doubles to exact 0
 # (/root/reference/R/sentomeasures_main.R:379-384); we use a tolerance so
@@ -54,6 +66,40 @@ def bucket_col(ts: Column, by: str) -> Column:
     if by not in BUCKET_FNS:
         raise ValueError(f"unknown bucket: {by}")
     return F.date_trunc(by, ts)
+
+
+def merge_partials(
+    partials: DataFrame,
+    to: str | None = None,
+    cols: list[str] = PARTIAL_COLS,
+    value: Column | None = None,
+) -> DataFrame:
+    """Merge partial rows per (bucket_ts, lexicon, feature) — re-bucketed
+    with date_trunc(``to``) when given — by summing ``cols``, then finalize
+    ``value`` (default: the wsum / wden ratio). Output: (bucket_ts, lexicon,
+    feature, value, *cols)."""
+    bucket = F.date_trunc(to, F.col("bucket_ts")).alias("bucket_ts") if to else "bucket_ts"
+    agg = partials.groupBy(bucket, *MEASURE_KEYS).agg(*[F.sum(c).alias(c) for c in cols])
+    if value is None:
+        value = F.expr(PARTIAL_VALUE_SQL)
+    return agg.withColumn("value", value).select("bucket_ts", *MEASURE_KEYS, "value", *cols)
+
+
+def word_count_total(
+    df: DataFrame,
+    by: str = "bucket_ts",
+    unit: tuple[str, ...] = ("url", "bucket_ts"),
+    name: str = "__bucket_wc",
+) -> DataFrame:
+    """(by, name): the double sum of word_count per ``by`` group, counting
+    each distinct ``unit`` once — a long-format sentiment frame repeats a
+    document's word count on every (lexicon, feature) row."""
+    return (
+        df.select(*unit, "word_count")
+        .distinct()
+        .groupBy(by)
+        .agg(F.sum("word_count").cast("double").alias(name))
+    )
 
 
 def _weight_numerator(how: str, alpha: float) -> Column:
@@ -84,37 +130,11 @@ def aggregate_docs(
 ) -> DataFrame:
     """sentiment: long table (url, warc_ts, [lang,] word_count, lexicon,
     feature, score) -> measures (bucket_ts, lexicon, feature, value
-    [, wsum, wden])."""
-    s = sentiment.withColumn("bucket_ts", bucket_col(F.col("warc_ts"), by))
-
-    needs_bucket_wc = how in ("exponential", "inverseExponential")
-    if needs_bucket_wc:
-        # per-bucket total word count over distinct documents
-        doc_wc = (
-            s.select("url", "bucket_ts", "word_count")
-            .distinct()
-            .groupBy("bucket_ts")
-            .agg(F.sum("word_count").cast("double").alias("__bucket_wc"))
-        )
-        s = s.join(doc_wc, "bucket_ts")
-
-    score = _ignore_zeros(F.col("score")) if do_ignore_zeros else F.col("score")
-    num = _weight_numerator(how, alpha)
-    num_eff = F.when(score.isNotNull(), num)  # weight only docs in the non-null set
-
-    agg = s.groupBy("bucket_ts", *MEASURE_KEYS).agg(
-        F.sum(num_eff * score).alias("wsum"),
-        F.sum(num_eff).alias("wden"),
-        F.count(F.when(score.isNotNull(), 1)).alias("n_docs_in"),
-        F.count("*").alias("n_docs"),
+    [, wsum, wden, n_docs_in, n_docs]). The single-salt case of
+    aggregate_docs_salted: phase 1 already groups by the final keys."""
+    return aggregate_docs_salted(
+        sentiment, by, how, do_ignore_zeros, alpha, n_salts=1, keep_partials=keep_partials
     )
-    agg = agg.withColumn(
-        "value", F.coalesce(F.try_divide(F.col("wsum"), F.col("wden")), F.lit(0.0))
-    )
-    cols = ["bucket_ts", *MEASURE_KEYS, "value"]
-    if keep_partials:
-        cols += ["wsum", "wden", "n_docs_in", "n_docs"]
-    return agg.select(*cols)
 
 
 def aggregate_docs_salted(
@@ -133,56 +153,37 @@ def aggregate_docs_salted(
       phase 1: groupBy(bucket, lexicon, feature, salt) partial sums,
                salt = pmod(xxhash64(url), n_salts) — deterministic, so a
                retried task lands in the same salt bucket;
-      phase 2: de-salt with a second (tiny) aggregation of the partials.
+      phase 2: de-salt with merge_partials (a second, tiny aggregation).
 
     Exactness: identical to aggregate_docs because the weight numerators are
     doc-local or depend only on bucket totals computed separately — partial
-    sums re-associate. Not available for the bucket-relative exponential
-    schemes' denominators? They are: __bucket_wc is computed with its own
-    salted two-phase sum below."""
-    if how not in ("equal_weight", "proportional", "inverseProportional",
-                   "exponential", "inverseExponential"):
-        raise ValueError(f"unknown docs how: {how}")
+    sums re-associate. With n_salts <= 1 there is nothing to de-salt and
+    phase 1 is the whole aggregation."""
     s = sentiment.withColumn("bucket_ts", bucket_col(F.col("warc_ts"), by))
-    salt = F.pmod(F.xxhash64("url"), F.lit(n_salts)).alias("__salt")
-
     if how in ("exponential", "inverseExponential"):
-        doc_wc = (
-            s.select("url", "bucket_ts", "word_count")
-            .distinct()
-            .withColumn("__salt", salt)
-            .groupBy("bucket_ts", "__salt")
-            .agg(F.sum("word_count").cast("double").alias("__wc_part"))
-            .groupBy("bucket_ts")
-            .agg(F.sum("__wc_part").alias("__bucket_wc"))
-        )
-        s = s.join(doc_wc, "bucket_ts")
+        s = s.join(word_count_total(s), "bucket_ts")
 
     score = _ignore_zeros(F.col("score")) if do_ignore_zeros else F.col("score")
     num = _weight_numerator(how, alpha)
-    num_eff = F.when(score.isNotNull(), num)
+    num_eff = F.when(score.isNotNull(), num)  # weight only docs in the non-null set
 
-    phase1 = s.withColumn("__salt", salt).groupBy(
-        "bucket_ts", *MEASURE_KEYS, "__salt"
-    ).agg(
+    keys = ["bucket_ts", *MEASURE_KEYS]
+    if n_salts > 1:
+        s = s.withColumn("__salt", F.pmod(F.xxhash64("url"), F.lit(n_salts)))
+        keys.append("__salt")
+    agg = s.groupBy(*keys).agg(
         F.sum(num_eff * score).alias("wsum"),
         F.sum(num_eff).alias("wden"),
         F.count(F.when(score.isNotNull(), 1)).alias("n_docs_in"),
         F.count("*").alias("n_docs"),
     )
-    agg = (
-        phase1.groupBy("bucket_ts", *MEASURE_KEYS)
-        .agg(
-            F.sum("wsum").alias("wsum"),
-            F.sum("wden").alias("wden"),
-            F.sum("n_docs_in").alias("n_docs_in"),
-            F.sum("n_docs").alias("n_docs"),
-        )
-        .withColumn("value", F.coalesce(F.try_divide(F.col("wsum"), F.col("wden")), F.lit(0.0)))
-    )
+    if n_salts > 1:
+        agg = merge_partials(agg)
+    else:
+        agg = agg.withColumn("value", F.expr(PARTIAL_VALUE_SQL))
     cols = ["bucket_ts", *MEASURE_KEYS, "value"]
     if keep_partials:
-        cols += ["wsum", "wden", "n_docs_in", "n_docs"]
+        cols += PARTIAL_COLS
     return agg.select(*cols)
 
 
@@ -202,31 +203,21 @@ def aggregate_sentences(
     s = sentiment
     score = _ignore_zeros(F.col("score")) if do_ignore_zeros else F.col("score")
 
+    # per-document word count: each sentence's count once
+    wc = word_count_total(s, by="url", unit=("url", "sentence_id"))
     if how in ("exponential", "inverseExponential"):
-        doc_wc = (
-            s.select("url", "sentence_id", "word_count")
-            .distinct()
-            .groupBy("url")
-            .agg(F.sum("word_count").cast("double").alias("__bucket_wc"))
-        )
-        s = s.join(doc_wc, "url")
+        s = s.join(wc, "url")
     num = _weight_numerator(how, alpha)
     num_eff = F.when(score.isNotNull(), num)
 
-    # distinct per-doc sentence word counts for the summed word_count
-    wc = (
-        s.select("url", "sentence_id", "word_count")
-        .distinct()
-        .groupBy("url")
-        .agg(F.sum("word_count").alias("word_count"))
-    )
     agg = s.groupBy("url", *MEASURE_KEYS).agg(
         F.first("warc_ts").alias("warc_ts"),
         F.first("lang").alias("lang"),
         F.coalesce(F.try_divide(F.sum(num_eff * score), F.sum(num_eff)), F.lit(0.0)).alias("score"),
     )
     return agg.join(wc, "url").select(
-        "url", "warc_ts", "lang", "word_count", *MEASURE_KEYS, "score"
+        "url", "warc_ts", "lang", F.col("__bucket_wc").cast("long").alias("word_count"),
+        *MEASURE_KEYS, "score",
     )
 
 
@@ -264,13 +255,7 @@ def with_doc_weights(
     assumption as measures_fill's grid spine)."""
     s = sentiment_bucketed
     if how in ("exponential", "inverseExponential"):
-        doc_wc = (
-            s.select("url", "bucket_ts", "word_count")
-            .distinct()
-            .groupBy("bucket_ts")
-            .agg(F.sum("word_count").cast("double").alias("__bucket_wc"))
-            .withColumnRenamed("bucket_ts", "__wc_bucket_ts")
-        )
+        doc_wc = word_count_total(s).withColumnRenamed("bucket_ts", "__wc_bucket_ts")
         # null-SAFE equi-join (ADVICE r5): groupBy keeps the NULL-bucket
         # group, and <=> lets those rows pick their denominator up — a
         # plain equi-join dropped NULL-bucket rows here before the

@@ -2,15 +2,12 @@
 with retention (north rule; no reference equivalent — the reference
 aggregates once per requested ``by``).
 
-Exactness contract: the document-aggregation value is a weighted mean
-value = sum(num_d * s_d) / sum(num_d). For the doc-LOCAL weighting schemes
-(equal_weight, proportional, inverseProportional) the numerator num_d
-depends only on the document, so partial-sum pairs (wsum, wden) compose
-exactly across tiers:
-
-    day.wsum = sum(hour.wsum),  day.wden = sum(hour.wden)
-    day.value = day.wsum / day.wden  == direct day aggregation (bit-for-bit
-    up to float associativity)
+Exactness contract: a tier row carries the bucket partial-sum format
+defined in ``aggregate/doc_agg.py`` (``PARTIAL_COLS``, finalized by
+``merge_partials``). For the doc-LOCAL weighting schemes (equal_weight,
+proportional, inverseProportional) those partials add across buckets, so
+a coarser tier merged from a finer one equals direct aggregation at the
+coarser bucket (bit-for-bit up to float associativity).
 
 The bucket-RELATIVE schemes (exponential, inverseExponential — num depends
 on the bucket's total word count) are NOT composable from (wsum, wden)
@@ -37,13 +34,19 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sentometrics_spark.aggregate.doc_agg import MEASURE_KEYS, aggregate_docs
+from sentometrics_spark.aggregate.doc_agg import (
+    MEASURE_KEYS,
+    PARTIAL_COLS,
+    ZERO_EPS,
+    aggregate_docs,
+    bucket_col,
+    merge_partials,
+    word_count_total,
+)
 
 TIER_ORDER = ["hour", "day", "week", "month"]
 
 COMPOSABLE_DOC_HOWS = ("equal_weight", "proportional", "inverseProportional")
-
-PARTIAL_COLS = ["wsum", "wden", "n_docs_in", "n_docs"]
 
 
 def base_tier(
@@ -68,19 +71,7 @@ def rollup(lower_tier: DataFrame, to: str) -> DataFrame:
     re-aggregation — no rescan of documents."""
     if to not in TIER_ORDER:
         raise ValueError(f"unknown tier: {to}")
-    agg = (
-        lower_tier.groupBy(
-            F.date_trunc(to, F.col("bucket_ts")).alias("bucket_ts"), *MEASURE_KEYS
-        )
-        .agg(
-            F.sum("wsum").alias("wsum"),
-            F.sum("wden").alias("wden"),
-            F.sum("n_docs_in").alias("n_docs_in"),
-            F.sum("n_docs").alias("n_docs"),
-        )
-        .withColumn("value", F.coalesce(F.try_divide(F.col("wsum"), F.col("wden")), F.lit(0.0)))
-    )
-    return agg.select("bucket_ts", *MEASURE_KEYS, "value", *PARTIAL_COLS)
+    return merge_partials(lower_tier, to)
 
 
 EXP_PARTIAL_COLS = ["s_sum", "wcs_sum", "wc_in", "n_docs_in", "n_docs", "bucket_wc"]
@@ -111,15 +102,7 @@ def base_tier_exponential(
     """Finest tier for the bucket-relative exponential/inverseExponential
     doc weighting, carrying the affine partials that make coarser tiers
     exact (see module docstring)."""
-    from sentometrics_spark.aggregate.doc_agg import ZERO_EPS, bucket_col
-
     s = sentiment.withColumn("bucket_ts", bucket_col(F.col("warc_ts"), by))
-    doc_wc = (
-        s.select("url", "bucket_ts", "word_count")
-        .distinct()
-        .groupBy("bucket_ts")
-        .agg(F.sum("word_count").cast("double").alias("bucket_wc"))
-    )
     score = (
         F.when(F.abs(F.col("score")) < ZERO_EPS, F.lit(None)).otherwise(F.col("score"))
         if do_ignore_zeros
@@ -136,7 +119,7 @@ def base_tier_exponential(
             F.count(F.when(F.col("__s").isNotNull(), 1)).alias("n_docs_in"),
             F.count("*").alias("n_docs"),
         )
-        .join(doc_wc, "bucket_ts")
+        .join(word_count_total(s, name="bucket_wc"), "bucket_ts")
         .na.fill(0.0, ["s_sum", "wcs_sum", "wc_in"])
     )
     c = 10.0 * alpha
@@ -151,13 +134,7 @@ def rollup_exponential(lower_tier: DataFrame, to: str, alpha: float = 0.1) -> Da
     the coarser bucket."""
     if to not in TIER_ORDER:
         raise ValueError(f"unknown tier: {to}")
-    agg = lower_tier.groupBy(
-        F.date_trunc(to, F.col("bucket_ts")).alias("bucket_ts"), *MEASURE_KEYS
-    ).agg(*[F.sum(col).alias(col) for col in EXP_PARTIAL_COLS])
-    c = 10.0 * alpha
-    return agg.withColumn("value", _exp_value(c)).select(
-        "bucket_ts", *MEASURE_KEYS, "value", *EXP_PARTIAL_COLS
-    )
+    return merge_partials(lower_tier, to, EXP_PARTIAL_COLS, _exp_value(10.0 * alpha))
 
 
 def build_all_tiers(

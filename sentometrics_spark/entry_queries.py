@@ -51,10 +51,17 @@ def _r6(col) -> F.Column:
     +-Infinity passes through unrounded: Spark's floor(DOUBLE) returns
     BIGINT, so floor(inf*1e6) silently clamps to Long.MaxValue (9.22e12
     after the divide) where DuckDB keeps inf — caught by the first full
-    sf0.1 oracle sweep on histogram_day's overflow bin (round 6)."""
+    sf0.1 oracle sweep on histogram_day's overflow bin (round 6). NaN
+    passes through for the same reason: Spark's floor clamps it to 0,
+    DuckDB keeps NaN."""
     c = col if not isinstance(col, str) else F.col(col)
     rounded = F.floor(c * 1000000.0 + 0.5 + 1e-9) / 1000000.0
-    return F.when(c == float("inf"), c).when(c == float("-inf"), c).otherwise(rounded)
+    return (
+        F.when(c == float("inf"), c)
+        .when(c == float("-inf"), c)
+        .when(F.isnan(c), c)
+        .otherwise(rounded)
+    )
 
 TSFMT_DUCK = "%Y-%m-%d %H:%M:%S"
 

@@ -9,8 +9,8 @@ This fused kernel performs the FIRST aggregation level inside the Arrow
 batch itself: each batch reduces directly to
 (bucket_ts, lexicon, feature, wsum, wden, n_docs_in, n_docs) partial rows —
 O(buckets-touched x measures) per batch instead of O(docs x measures).
-The downstream groupBy then merges partials (associative), exactly like the
-tier rollups and the streaming ingest.
+The downstream merge_partials then merges them (associative), exactly like
+the tier rollups and the streaming ingest (partial format: aggregate/doc_agg.py).
 
 Only the doc-LOCAL across-document weighting schemes are fusable
 (equal_weight / proportional / inverseProportional — the same composability
@@ -25,9 +25,8 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from sentometrics_spark.aggregate.doc_agg import ZERO_EPS
+from sentometrics_spark.aggregate.doc_agg import ZERO_EPS, merge_partials
 from sentometrics_spark.aggregate.tiers import COMPOSABLE_DOC_HOWS
 from sentometrics_spark.corpus import check_language_coverage, feature_columns
 from sentometrics_spark.lexicons import Lexicons
@@ -144,19 +143,4 @@ def score_to_bucket_partials(
 def finalize_partials(partials: DataFrame) -> DataFrame:
     """Merge batch partials into the finalized tier (same shape as
     aggregate_docs with keep_partials=True)."""
-    return (
-        partials.groupBy("bucket_ts", "lexicon", "feature")
-        .agg(
-            F.sum("wsum").alias("wsum"),
-            F.sum("wden").alias("wden"),
-            F.sum("n_docs_in").alias("n_docs_in"),
-            F.sum("n_docs").alias("n_docs"),
-        )
-        .withColumn(
-            "value",
-            F.coalesce(
-                F.when(F.col("wden") != 0, F.col("wsum") / F.col("wden")), F.lit(0.0)
-            ),
-        )
-        .select("bucket_ts", "lexicon", "feature", "value", "wsum", "wden", "n_docs_in", "n_docs")
-    )
+    return merge_partials(partials)

@@ -7,14 +7,14 @@ Our streaming design keeps the reference's DETERMINISTIC-RECOMPUTE
 semantics for late data instead of watermark-dropping:
 
   - every micro-batch scores its documents (same Arrow UDF as batch) and
-    appends (bucket_ts, lexicon, feature, wsum, wden, n_docs...) PARTIAL
-    rows to the hour-tier partials table;
-  - partials are associative (doc-local weight numerators), so the
-    finalized tier value is sum(wsum)/sum(wden) over all partial rows of a
-    bucket — a late document just adds one more partial row, and the bucket
-    is exact again at next read. No state store required, arbitrarily late
-    data folds in, and a compaction pass (rollup on the partials) keeps the
-    table small;
+    appends hour-tier PARTIAL rows to the partials table, in the bucket
+    partial-sum format of aggregate/doc_agg.py;
+  - partials of disjoint document sets merge exactly (doc-local weight
+    numerators), so the finalized tier is doc_agg.merge_partials over all
+    partial rows — a late document just adds one more partial row, and the
+    bucket is exact again at next read. No state store required,
+    arbitrarily late data folds in, and a compaction pass (the same merge)
+    keeps the table small;
   - coarser tiers keep reading from the hour tier exactly as in batch.
 
 This mirrors the batch tier engine bit-for-bit: reading the partials table
@@ -26,21 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sentometrics_spark.aggregate.doc_agg import MEASURE_KEYS
+from sentometrics_spark.aggregate.doc_agg import merge_partials
 from sentometrics_spark.aggregate.tiers import base_tier
 from sentometrics_spark.lexicons import Lexicons
 from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
-
-
-def read_pages_stream(
-    spark: SparkSession, path: str, schema: str, max_files_per_trigger: int = 8
-) -> DataFrame:
-    return (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(path)
-    )
 
 
 def stream_to_hour_tier(
@@ -196,17 +185,7 @@ def apply_refresh_exactly_once(
 def finalize_hour_tier(spark: SparkSession, partials_path: str) -> DataFrame:
     """Finalized hour tier from the streaming partials: re-associate the
     partial sums (late/duplicate-bucket rows fold in exactly)."""
-    p = spark.read.parquet(partials_path)
-    return (
-        p.groupBy("bucket_ts", *MEASURE_KEYS)
-        .agg(
-            F.sum("wsum").alias("wsum"),
-            F.sum("wden").alias("wden"),
-            F.sum("n_docs_in").alias("n_docs_in"),
-            F.sum("n_docs").alias("n_docs"),
-        )
-        .withColumn("value", F.coalesce(F.try_divide(F.col("wsum"), F.col("wden")), F.lit(0.0)))
-    )
+    return merge_partials(spark.read.parquet(partials_path))
 
 
 SESSION_OUT_SCHEMA = (
@@ -377,30 +356,10 @@ def compact_partials(spark: SparkSession, partials_path: str) -> None:
     max_batch = p.agg(F.max("batch_id")).collect()[0][0]
     if max_batch is None:
         return
-    old = p.filter(F.col("batch_id") != max_batch)
-    newest = p.filter(F.col("batch_id") == max_batch)
-    compacted = (
-        old.groupBy("bucket_ts", *MEASURE_KEYS)
-        .agg(
-            F.sum("wsum").alias("wsum"),
-            F.sum("wden").alias("wden"),
-            F.sum("n_docs_in").alias("n_docs_in"),
-            F.sum("n_docs").alias("n_docs"),
-        )
-        .withColumn(
-            "value", F.coalesce(F.try_divide(F.col("wsum"), F.col("wden")), F.lit(0.0))
-        )
-        .withColumn("batch_id", F.lit(-1))
-        .select(
-            "bucket_ts", *MEASURE_KEYS, "value", "wsum", "wden", "n_docs_in", "n_docs", "batch_id"
-        )
-        .unionByName(
-            newest.select(
-                "bucket_ts", *MEASURE_KEYS, "value", "wsum", "wden",
-                "n_docs_in", "n_docs", "batch_id",
-            )
-        )
-    )
+    old = merge_partials(p.filter(F.col("batch_id") != max_batch))
+    old = old.withColumn("batch_id", F.lit(-1))
+    newest = p.filter(F.col("batch_id") == max_batch).select(*old.columns)
+    compacted = old.unionByName(newest)
     tmp = partials_path.rstrip("/") + "__compact"
     # keep the batch_id=... partition layout the streaming writer uses, so
     # post-compaction appends land beside it without mixing layouts

@@ -220,3 +220,57 @@ def test_refresh_continuous_exponential(spark, sent, tmp_path):
         np.testing.assert_allclose(
             got["value"].to_numpy(), w["value"].to_numpy(), rtol=1e-9, atol=1e-12
         )
+
+
+@pytest.mark.parametrize("how", ["equal_weight", "proportional", "inverseProportional"])
+def test_all_zero_bucket_finalizes_identically(spark, tmp_path, how):
+    """wden = 0 edge: under do_ignore_zeros every doc of these buckets
+    leaves the non-null set, so each path must finalize value = 0.0 with
+    n_docs_in = 0. Docs sit in hour 00 of their day, so hour and day
+    buckets coincide and all five paths can be compared row for row."""
+    import datetime as dt
+
+    from sentometrics_spark import streaming
+    from sentometrics_spark.aggregate.doc_agg import aggregate_docs_salted
+    from sentometrics_spark.scoring.fused import finalize_partials, score_to_bucket_partials
+    from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
+
+    lex = Lexicons(lex=fixture_lexicons().lex)
+    pages = spark.createDataFrame(
+        [
+            ("u1", dt.datetime(2024, 1, 1, 0, 10), "en", "zzz qqq xxx", 1.0),
+            ("u2", dt.datetime(2024, 1, 1, 0, 40), "en", "qqq", 0.5),
+            ("u3", dt.datetime(2024, 1, 2, 0, 20), "en", "", 1.0),
+        ],
+        "url string, warc_ts timestamp, lang string, text string, feat_x double",
+    )
+    sent = compute_sentiment_udf(pages, lex, "proportional", mode="unigram")
+    hour = base_tier(sent, how=how, by="hour")
+    partials = str(tmp_path / "partials")
+    for batch, urls in enumerate([["u1"], ["u2", "u3"]]):
+        # two micro-batch partitions, as stream_to_hour_tier writes them
+        base_tier(sent.filter(F.col("url").isin(urls)), how=how, by="hour").withColumn(
+            "batch_id", F.lit(batch)
+        ).write.mode("append").partitionBy("batch_id").parquet(partials)
+
+    paths = {
+        "aggregate_docs": aggregate_docs(sent, by="day", how=how),
+        "aggregate_docs_salted": aggregate_docs_salted(sent, by="day", how=how, n_salts=4),
+        "fused": finalize_partials(
+            score_to_bucket_partials(pages, lex, "proportional", how, by="hour")
+        ),
+        "rollup": rollup(hour, "day"),
+        "streaming": streaming.finalize_hour_tier(spark, partials),
+    }
+    cols = [*KEY, "value", "wsum", "wden", "n_docs_in", "n_docs"]
+    rows = {}
+    for name, df in paths.items():
+        # fused partials start from numpy zeros where Spark's sum over an
+        # empty non-null set is NULL; both mean "no weighable docs"
+        pdf = df.select(*cols).toPandas().fillna({"wsum": 0.0, "wden": 0.0})
+        rows[name] = pdf.sort_values(KEY).reset_index(drop=True)
+    want = rows["aggregate_docs"]
+    assert len(want) == 2 * len(lex.lexicon_names())
+    assert (want["value"] == 0.0).all() and (want["n_docs_in"] == 0).all(), want
+    for name, got in rows.items():
+        assert got.equals(want), (name, got, want)
