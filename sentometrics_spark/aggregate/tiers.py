@@ -144,9 +144,15 @@ def build_all_tiers(
 ) -> dict[str, DataFrame]:
     """Rollup lattice: hour from documents; day from hour; week and month
     BOTH from day (ISO weeks straddle month boundaries, so week and month
-    are siblings, not a chain)."""
+    are siblings, not a chain).
+
+    The returned ``"hour"`` frame is persisted: it is the only tier read
+    from documents, and day (through it week and month) re-aggregate its
+    panel-sized rows instead of re-running the doc-level aggregation and
+    everything under it. The caller releases it with
+    ``tiers["hour"].unpersist()``."""
     tiers: dict[str, DataFrame] = {}
-    tiers["hour"] = base_tier(sentiment, how, do_ignore_zeros, by="hour")
+    tiers["hour"] = base_tier(sentiment, how, do_ignore_zeros, by="hour").persist()
     tiers["day"] = rollup(tiers["hour"], "day")
     tiers["week"] = rollup(tiers["day"], "week")
     tiers["month"] = rollup(tiers["day"], "month")

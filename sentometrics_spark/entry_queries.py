@@ -1115,9 +1115,14 @@ def q_measures_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sm0 = sento_measures(pages.filter(F.col("feat_srca") == 1.0), _no_valence(), spec, engine="algebraic")
     sm1 = measures_update(sm0, pages, _no_valence(), engine="algebraic")
-    return _fmt_ts(sm1.measures, "bucket_ts").select(
+    # materialize the answer, then release both bundles' cached tables so no
+    # later query's plan picks them up
+    out = _fmt_ts(sm1.measures, "bucket_ts").select(
         "bucket_ts", "lexicon", "feature", "timeweight", _r6("value").alias("value")
-    )
+    ).localCheckpoint()
+    sm1.unpersist()
+    sm0.unpersist()
+    return out
 
 
 def q_add_features_count(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,17 +2,24 @@
 ``sento_measures(corpus, lexicons, ctr)``
 (/root/reference/R/sentomeasures_main.R:245-251; lifecycle SURVEY.md §3).
 
-One lazy DataFrame DAG:
+A lazy DataFrame DAG with two materialized points (persisted at Spark's
+default memory-and-disk level, so each is computed once per run):
 
     corpus -> compute_sentiment (Arrow UDF or pure-Catalyst algebraic)
+              [persisted: SentoMeasures.sentiment, scored once and reused by
+               the doc panel, build_all_tiers, attribution, measures_update]
            -> aggregate_docs    (shuffle 1: (bucket, lexicon, feature))
+              [persisted: SentoMeasures.doc_panel, scanned three times by
+               the spine fill: bounds, dims, join]
            -> measures_fill     (spine join)
            -> aggregate_time    (shuffle 2: window partition by series)
+
+``SentoMeasures.unpersist()`` releases both.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -53,9 +60,16 @@ class SentoMeasures:
     (/root/reference/R/sentomeasures_main.R:206-220), long-format."""
 
     measures: DataFrame  # (bucket_ts, lexicon, feature, timeweight, value)
-    sentiment: DataFrame  # doc-level long sentiment
+    sentiment: DataFrame  # doc-level long sentiment (persisted)
     kernels: dict[str, np.ndarray]  # attribWeights$B
     spec: AggSpec
+    doc_panel: DataFrame = field(repr=False)  # bucketed docs (persisted)
+
+    def unpersist(self) -> None:
+        """Release every frame the constructor persisted: the scored doc
+        table and the bucketed doc panel."""
+        self.sentiment.unpersist()
+        self.doc_panel.unpersist()
 
     @property
     def dimensions(self) -> dict[str, list[str]]:
@@ -97,6 +111,28 @@ class SentoMeasures:
         }
 
 
+def _measures_from_sentiment(
+    sentiment: DataFrame, spec: AggSpec, kernels: dict[str, np.ndarray]
+) -> SentoMeasures:
+    """The tail both constructors share: persist the scored docs and their
+    bucketed doc panel (the module docstring's two materialized points),
+    then fill and roll."""
+    sentiment = sentiment.persist()
+    doc_panel = aggregate_docs(
+        sentiment,
+        by=spec.by,
+        how=spec.how_docs,
+        do_ignore_zeros=spec.do_ignore_zeros,
+        alpha=spec.alpha_exp_docs,
+        keep_partials=False,
+    ).persist()
+    filled = measures_fill(doc_panel, by=spec.by, fill=spec.fill)
+    measures = aggregate_time(
+        filled.select("bucket_ts", "lexicon", "feature", "value"), kernels, spec.lag
+    )
+    return SentoMeasures(measures, sentiment, kernels, spec, doc_panel)
+
+
 def sento_measures(
     pages: DataFrame,
     lexicons: Lexicons,
@@ -104,20 +140,16 @@ def sento_measures(
     engine: str = "auto",
     mode: str | None = None,
 ) -> SentoMeasures:
+    """Score, bucket, fill and roll. The returned ``sentiment`` and doc
+    panel are persisted; release them with ``SentoMeasures.unpersist()``.
+
+    Until then they stay in the session's cache, and Spark substitutes them
+    into any later plan with the same logical subtree, matching file scans
+    on their root path, not on the files under it. Release the bundle
+    before its input path is re-written by anything but this session's own
+    DataFrame writer (which re-caches by path): a later plan over the new
+    files would otherwise read the old scored rows."""
     sentiment = compute_sentiment(pages, lexicons, spec.how_within, mode=mode, engine=engine)
-    measures_doc = aggregate_docs(
-        sentiment,
-        by=spec.by,
-        how=spec.how_docs,
-        do_ignore_zeros=spec.do_ignore_zeros,
-        alpha=spec.alpha_exp_docs,
-        keep_partials=False,
-    )
-    # the bucketed panel is tiny (#buckets x #measures); persist it so the
-    # spine-fill (which scans it three times: bounds, dims, join) and the
-    # rolling window do not re-execute the full corpus-scoring DAG
-    measures_doc = measures_doc.persist()
-    filled = measures_fill(measures_doc, by=spec.by, fill=spec.fill)
     if spec.lag == 1:
         # lag = 1 means no time aggregation: the reference replaces the
         # requested schemes with one 'dummyTime' identity kernel
@@ -125,10 +157,7 @@ def sento_measures(
         kernels = {"dummyTime": np.ones(1)}
     else:
         kernels = setup_time_weights(spec.time_kernels, spec.lag)
-    measures = aggregate_time(
-        filled.select("bucket_ts", "lexicon", "feature", "value"), kernels, spec.lag
-    )
-    return SentoMeasures(measures=measures, sentiment=sentiment, kernels=kernels, spec=spec)
+    return _measures_from_sentiment(sentiment, spec, kernels)
 
 
 def measures_update(
@@ -142,25 +171,13 @@ def measures_update(
     the existing sentiment table (left_anti by id), merge with the retained
     doc-level scores, re-run the aggregation with the stored spec
     (measures_update, /root/reference/R/sentomeasures_measures_xyz.R:158-176).
+    The merged sentiment and its doc panel are persisted as in
+    sento_measures. ``sm`` keeps its own; releasing them after the update's
+    outputs are computed costs no rescoring.
     At scale, this is the batch face of the checkpoint/resume design
     (storage/checkpoint.py) and of the streaming partials table."""
     existing_ids = sm.sentiment.select("url").distinct()
     new_pages = pages_incoming.join(existing_ids, "url", "left_anti")
     new_sent = compute_sentiment(new_pages, lexicons, sm.spec.how_within, mode=mode, engine=engine)
     merged = sm.sentiment.unionByName(new_sent)
-
-    from sentometrics_spark.aggregate.doc_agg import aggregate_docs
-
-    measures_doc = aggregate_docs(
-        merged,
-        by=sm.spec.by,
-        how=sm.spec.how_docs,
-        do_ignore_zeros=sm.spec.do_ignore_zeros,
-        alpha=sm.spec.alpha_exp_docs,
-        keep_partials=False,
-    ).persist()
-    filled = measures_fill(measures_doc, by=sm.spec.by, fill=sm.spec.fill)
-    measures = aggregate_time(
-        filled.select("bucket_ts", "lexicon", "feature", "value"), sm.kernels, sm.spec.lag
-    )
-    return SentoMeasures(measures=measures, sentiment=merged, kernels=sm.kernels, spec=sm.spec)
+    return _measures_from_sentiment(merged, sm.spec, sm.kernels)

@@ -130,6 +130,7 @@ def test_full_pipeline_and_nmeasures(pages, pages_pdf, no_valence):
     dims = sm.dimensions
     assert sm.nmeasures() == len(dims["lexicons"]) * len(dims["features"]) * len(dims["time"])
     assert sm.nobs() == sm.measures.select("bucket_ts").distinct().count()
+    sm.unpersist()
 
 
 def test_lag_one_identity(sent):
@@ -200,3 +201,4 @@ def test_lag_one_dummy_time(pages, lexicons):
     sm = sento_measures(pages, lex, spec)
     assert sm.dimensions["time"] == ["dummyTime"]
     assert list(sm.kernels) == ["dummyTime"]
+    sm.unpersist()

@@ -46,6 +46,7 @@ def test_golden_measures_day_almon(pages):
         .sort_values(["bucket_ts", "lexicon", "feature", "timeweight"])
         .reset_index(drop=True)
     )
+    sm.unpersist()
     assert len(got) == len(exp)
     got["bucket_ts"] = pd.to_datetime(got["bucket_ts"])
     exp["bucket_ts"] = pd.to_datetime(exp["bucket_ts"])

@@ -279,6 +279,8 @@ def test_full_pipeline_on_real_corpus(spark):
             .toPandas().set_index("bucket_ts")["s"].sort_index()
         )
         np.testing.assert_allclose(a.to_numpy(), pred.to_numpy(), atol=1e-9)
+    m.unpersist()
+    sm.unpersist()
 
 
 def test_model_families_on_real_epu(spark):
@@ -307,6 +309,7 @@ def test_model_families_on_real_epu(spark):
     )
     sm = ss.sento_measures(pages, lex, spec)
     panel = to_wide(sm.measures).toPandas()
+    sm.unpersist()
     panel["month"] = pd.to_datetime(panel["bucket_ts"]).dt.to_period("M")
     panel = panel.drop(columns=["bucket_ts"]).set_index("month").sort_index()
     assert panel.shape[1] == 2 * 4 * 6  # 2 lex x 4 features x 6 almon kernels

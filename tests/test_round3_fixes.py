@@ -57,6 +57,7 @@ def split_partials(spark, pages):
         t: full[t].select(*KEY, "value").toPandas().sort_values(KEY).reset_index(drop=True)
         for t in ("hour", "day", "week", "month")
     }
+    full["hour"].unpersist()
     return pa, pb, expected
 
 

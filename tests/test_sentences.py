@@ -7,10 +7,10 @@ from pyspark.sql import functions as F
 from sentometrics_spark.aggregate.doc_agg import aggregate_sentences
 from sentometrics_spark.lexicons import Lexicons
 from sentometrics_spark.scoring.sentences import (
-    _sentence_cluster_scores,
     compute_sentiment_sentences_udf,
     split_sentences,
 )
+from sentometrics_spark.scoring.udf_engine import _POSITIONAL, _positional_weights
 
 
 def test_split_sentences_markers():
@@ -20,6 +20,102 @@ def test_split_sentences_markers():
     # word_count includes the c_c marker (reference quirk: nPuncts never
     # increments because check_for_commas only fires on lexicon hits)
     assert len(toks[0]) == 5
+
+
+def _sentence_cluster_scores(tokens: list[str], pack, how: str, tfidf) -> np.ndarray:
+    """Scalar reference kernel: one sentence under the cluster-valence
+    approach, written as the reference worker reads. The vectorized
+    ``_sentence_cluster_scores_batch`` must equal it (see
+    test_sentence_cluster_batch_equals_loop)."""
+    n = len(tokens)
+    nL = pack.polarity.shape[1]
+    w2 = pack.word2id
+    vt = pack.valence_t
+    nB, nA = 5, 2
+    token_scores: dict[int, np.ndarray] = {}
+    token_shift: dict[int, float] = {}
+    weight_word: dict[int, str] = {}
+    visits: dict[int, int] = {}
+    lB = 0
+    for j, tok in enumerate(tokens):
+        vid = w2.get(tok)
+        if vid is None:
+            continue
+        token_scores[j] = pack.polarity[vid]
+        weight_word[j] = tok
+        visits[j] = visits.get(j, 0) + 1
+        neg = amp = deamp = adv = 0
+        st = max(lB, j - nB)
+        en = min(n, j + nA + 1)
+        for m in range(en, n):  # window extends to the next comma marker
+            if tokens[m] == "c_c":
+                en = m
+                break
+        for k in range(st, en):
+            if k == j:
+                continue
+            kvid = w2.get(tokens[k])
+            if kvid is not None:
+                token_scores[k] = pack.polarity[kvid]
+                weight_word[k] = tok
+                visits[k] = visits.get(k, 0) + 1
+            else:
+                t = vt.get(tokens[k])
+                if t == 1:
+                    neg += 1
+                elif t == 2:
+                    amp += 1
+                elif t == 3:
+                    deamp += 1
+                elif t == 4:
+                    adv += 1 if k < j else -1
+        nn = neg % 2
+        wA = (1 - nn) * amp * 0.8
+        wD = (-nn * amp - deamp) * 0.8
+        if wD < -1:
+            wD = -1.0
+        impact = (1.0 + (wA + wD)) * (1.0 + 0.25 * adv)
+        if nn == 1:
+            impact = -impact
+        token_shift[j] = impact
+        # NOTE: unlike the doc-level cluster worker, the sentence worker does
+        # NOT reset lB/j (no non-overlap jump) — clusters may overlap.
+    if not token_scores:
+        return np.zeros(nL)
+    idxs = np.fromiter(token_scores.keys(), dtype=np.int64)
+    pol = np.vstack([token_scores[i] for i in idxs])
+    shift = np.fromiter((token_shift.get(int(i), 1.0) for i in idxs), dtype=np.float64)
+    # the C++ worker calls update_token_weights at EVERY visit of a hit —
+    # once as a cluster center, once per window it appears in — so the
+    # positional normalizer and nPolarized accumulate visit MULTIPLICITY,
+    # while each token still contributes to the score exactly once
+    # (SentimentScorerSentences.h:66,84-86; update_token_weights
+    # reference src/utils.h:99-125)
+    vis = np.fromiter((visits.get(int(i), 1) for i in idxs), dtype=np.float64)
+    if how == "counts":
+        w = np.ones(len(idxs))
+    elif how == "proportional":
+        w = np.full(len(idxs), 1.0 / n)
+    elif how == "proportionalSquareRoot":
+        w = np.full(len(idxs), 1.0 / np.sqrt(n))
+    elif how == "proportionalPol":
+        npol = ((pol != 0).astype(np.float64) * vis[:, None]).sum(axis=0)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            wm = np.where(npol > 0, 1.0 / npol, 0.0)
+        return (pol * shift[:, None] * wm[None, :]).sum(axis=0)
+    elif how == "TFIDF":
+        n_corpus, df_map = tfidf
+        dfv = np.fromiter(
+            (df_map.get(weight_word[int(i)], 0.0) for i in idxs), dtype=np.float64
+        )
+        w = np.log10(n_corpus / (1.0 + dfv))
+    elif how in _POSITIONAL:
+        w_raw = _positional_weights(how, idxs + 1, np.full(len(idxs), n))
+        norm = float((w_raw * vis).sum())
+        w = w_raw / norm if norm != 0 else np.zeros(len(idxs))
+    else:
+        raise ValueError(how)
+    return (pol * (shift * w)[:, None]).sum(axis=0)
 
 
 @pytest.fixture()
@@ -169,10 +265,7 @@ def test_sentence_cluster_batch_equals_loop():
     import numpy as np
 
     from sentometrics_spark.lexicons import fixture_lexicons
-    from sentometrics_spark.scoring.sentences import (
-        _sentence_cluster_scores,
-        _sentence_cluster_scores_batch,
-    )
+    from sentometrics_spark.scoring.sentences import _sentence_cluster_scores_batch
 
     pack = fixture_lexicons().pack("en")
     rng = np.random.RandomState(3)

@@ -321,6 +321,7 @@ def test_stream_refresh_tiers_equals_batch(spark, pages, tmp_path):
         np.testing.assert_allclose(
             got["value"].to_numpy(), exp["value"].to_numpy(), rtol=1e-9, atol=1e-12
         )
+    full["hour"].unpersist()
 
 
 def test_stream_events_tiers_equal_batch(spark, sf_dir, tmp_path):

@@ -5,8 +5,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sentometrics_spark.aggregate.doc_agg import aggregate_docs
+from sentometrics_spark.aggregate.doc_agg import PARTIAL_COLS, aggregate_docs
 from sentometrics_spark.aggregate.tiers import (
+    TIER_ORDER,
     RetentionPolicy,
     TierStore,
     base_tier,
@@ -53,7 +54,93 @@ def test_chained_tiers(sent):
     direct = aggregate_docs(sent, by="month", how="proportional", keep_partials=False)
     got = tiers["month"].select(*KEY, "value").toPandas().sort_values(KEY)
     exp = direct.select(*KEY, "value").toPandas().sort_values(KEY)
+    tiers["hour"].unpersist()
     np.testing.assert_allclose(got["value"].to_numpy(), exp["value"].to_numpy(), atol=1e-12, rtol=1e-9)
+
+
+def _plan_nodes(plan):
+    """Nodes of a physical plan, descending through AQE and its query
+    stages but not into the plans behind cached relations: the work the
+    query itself does."""
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        else:
+            out.append(node)
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def _cols(node) -> set[str]:
+    out = node.output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
+def _tier_rows(df):
+    return (
+        df.select(*KEY, "value", *PARTIAL_COLS)
+        .toPandas()
+        .sort_values(KEY)
+        .reset_index(drop=True)
+    )
+
+
+def test_pipeline_scores_each_document_once(pages, lexicons):
+    """sento_measures keeps its scored table and build_all_tiers its hour
+    tier: once the measures have run, no tier re-runs the Python scoring
+    node, and every tier reads only the cached hour rows, so day/week/month
+    have no Exchange over doc-level rows. All four tiers still equal a
+    from-scratch build over freshly scored docs."""
+    from sentometrics_spark.config import AggSpec, TimeKernelSpec
+    from sentometrics_spark.pipeline import compute_sentiment, sento_measures
+
+    lex = Lexicons(lex=lexicons.lex)
+    spec = AggSpec(how_within="proportional", how_docs="proportional", by="day",
+                   lag=2, time_kernels=(TimeKernelSpec("linear"),))
+    sm = sento_measures(pages, lex, spec)
+    sm.measures.collect()
+    built = build_all_tiers(sm.sentiment, how="proportional")
+    got = {t: _tier_rows(df) for t, df in built.items()}
+
+    for tier, df in built.items():
+        nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+        assert "MapInPandas" not in [n.nodeName() for n in nodes], tier
+        leaves = [n for n in nodes if n.children().size() == 0]
+        assert leaves, tier
+        for leaf in leaves:
+            # the cached hour tier (partial-sum rows), never a file scan or
+            # the doc-level table
+            cols = _cols(leaf)
+            assert leaf.nodeName() == "InMemoryTableScan", (tier, leaf.nodeName())
+            assert "wsum" in cols and "score" not in cols, (tier, cols)
+    # the hour cache was built from the persisted scored table
+    (hour_scan,) = _plan_nodes(built["hour"]._jdf.queryExecution().executedPlan())
+    inner = _plan_nodes(hour_scan.relation().cachedPlan())
+    assert "MapInPandas" not in [n.nodeName() for n in inner]
+    assert any(
+        n.nodeName() == "InMemoryTableScan" and "score" in _cols(n) for n in inner
+    )
+
+    built["hour"].unpersist()
+    sm.unpersist()
+    fresh = compute_sentiment(pages, lex, "proportional")
+    want = {"hour": _tier_rows(base_tier(fresh, how="proportional", by="hour"))}
+    for t in ("day", "week", "month"):
+        want[t] = _tier_rows(aggregate_docs(fresh, by=t, how="proportional"))
+    for t in TIER_ORDER:
+        assert len(got[t]) == len(want[t]) > 0, t
+        assert got[t][KEY].equals(want[t][KEY]), t
+        for c in ("value", *PARTIAL_COLS):
+            np.testing.assert_allclose(
+                got[t][c].to_numpy(float), want[t][c].to_numpy(float),
+                rtol=0, atol=1e-12, err_msg=f"{t}.{c}",
+            )
 
 
 def test_bucket_relative_scheme_rejected(sent):
@@ -175,6 +262,7 @@ def test_refresh_continuous_incremental_equals_full(spark, sent, tmp_path):
         np.testing.assert_allclose(
             got["value"].to_numpy(), want["value"].to_numpy(), rtol=1e-9, atol=1e-12
         )
+    full["hour"].unpersist()
 
     # single-day batch: only that day's hour/day partitions are rewritten
     import os

@@ -33,6 +33,9 @@ def test_measures_update_equals_full_recompute(spark, pages, lexicons):
     direct = sento_measures(pages, lex, spec)
     a = updated.measures.toPandas().sort_values(MKEY).reset_index(drop=True)
     b = direct.measures.toPandas().sort_values(MKEY).reset_index(drop=True)
+    for sm in (updated, sm_half, direct):
+        sm.unpersist()
+    half.unpersist()
     assert len(a) == len(b)
     np.testing.assert_allclose(a["value"], b["value"], atol=1e-12, rtol=1e-9)
 
@@ -111,6 +114,7 @@ def test_summary_introspection(pages, lexicons):
     lex = Lexicons(lex=fixture_lexicons().lex)
     sm = sento_measures(pages, lex, AggSpec(by="week", lag=2, time_kernels=(TimeKernelSpec("linear"),)))
     s = sm.summary()
+    sm.unpersist()
     assert s["by"] == "week" and s["lag"] == 2
     assert s["nmeasures"] == 2 * 3 * 1
     assert s["nobs"] > 0 and s["first_bucket"] < s["last_bucket"]
